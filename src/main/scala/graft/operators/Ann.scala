@@ -496,27 +496,31 @@ object Ann {
     * rationale as [[searchIvfIndex]]. */
   def searchSparseIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queryTerms: DataFrame, k: Int): DataFrame =
-    sparseTopK(prunedSparsePostings(spark, dir, queryTerms), queryTerms, k)
+    sparseTopK(prunedSparsePostings(spark, dir, queryTerms,
+      IndexFiles.tombstones(spark, dir)), queryTerms, k)
 
   /** The bucket-pruned, tombstone-filtered (id, term, w) scan every
     * sparse-index search starts from: query-term buckets collected
-    * driver-side (≤ |query terms| ints) and applied as typed literal
-    * partition filters — static pruning at the file index. */
+    * driver-side (≤ |query terms| ints; a projection, so a local query
+    * frame runs no job) and applied as typed literal partition
+    * filters — static pruning at the file index. `dead` is the index's
+    * [[IndexFiles.tombstones]], read once by the caller. */
   private def prunedSparsePostings(spark: org.apache.spark.sql.SparkSession,
-      dir: String, queryTerms: DataFrame): DataFrame = {
+      dir: String, queryTerms: DataFrame,
+      dead: Option[DataFrame]): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
-    val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
+    val buckets = IndexFiles.read(spark, s"$dir/meta").head().getInt(0)
     val wanted = queryTerms
       .select(pmod(col("term"), lit(buckets)).cast("int"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val raw = spark.read.parquet(s"$dir/postings")
+      .collect().map(_.getInt(0)).distinct.toSeq
+    val raw = IndexFiles.read(spark, s"$dir/postings")
     val bIsInt =
       raw.schema("tbucket").dataType == org.apache.spark.sql.types.IntegerType
     val typed: Seq[Any] = if (bIsInt) wanted else wanted.map(_.toLong)
     val pruned = (if (wanted.isEmpty) raw.filter(lit(false))
                   else raw.filter(col("tbucket").isin(typed: _*)))
       .drop("tbucket", "src")
-    IndexFiles.dropTombstones(spark, dir, pruned)
+    IndexFiles.dropTombstones(spark, dir, pruned, dead)
   }
 
   /** BM25-scored search over a persisted sparse index — the scoring
@@ -541,14 +545,15 @@ object Ann {
     require(hasBm25Sidecars(spark, dir),
       s"$dir has no BM25 sidecars (pre-BM25 index) — run " +
         "backfillBm25Sidecars(spark, dir) once before BM25 searches")
-    val p = prunedSparsePostings(spark, dir, queryTerms)
+    val dead = IndexFiles.tombstones(spark, dir)
+    val p = prunedSparsePostings(spark, dir, queryTerms, dead)
       .withColumnRenamed("w", "tf")
     val dl = IndexFiles.dropTombstones(spark, dir,
-      spark.read.parquet(s"$dir/doclens").drop("src"))
+      IndexFiles.read(spark, s"$dir/doclens").drop("src"), dead)
     val stats =
-      if (IndexFiles.tombstones(spark, dir).isDefined)
+      if (dead.isDefined)
         dl.agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
-      else spark.read.parquet(s"$dir/stats")
+      else IndexFiles.read(spark, s"$dir/stats")
     bm25Rank(p, queryTerms, dl, stats, k, k1, b)
   }
 
@@ -1404,7 +1409,7 @@ object Ann {
     }: _*)).getField("cell")
 
   private[operators] def ivfFit(corpus: DataFrame, nlist: Int, seed: Long,
-      trainCap: Long): Either[DataFrame, (DataFrame, DataFrame)] = {
+      trainCap: Long): Either[DataFrame, (DataFrame, Array[Array[Double]])] = {
     // zero-norm vectors (failed/padded embeds — a reality at corpus
     // scale) are undefined under cosine and can't rank anyway — drop
     val spreadCorpus = Dedup.spread(corpus)
@@ -1440,31 +1445,64 @@ object Ann {
     val cb = sphericalKMeans(sample, nlist, seed)
     val cells = spreadCorpus
       .select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
-    // centroid table is nlist rows — driver-side, broadcast to probe
-    val centroids = {
-      val s = corpus.sparkSession
-      import s.implicits._
-      cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "cv")
-    }
-    Right((cells, centroids))
+    Right((cells, cb))
   }
 
-  /** (qid, qv, cell): each query paired with its `nprobe` nearest
-    * centroids — the one definition the in-memory search and the
-    * persisted-index search both probe through. */
-  private def probeCells(centroids: DataFrame, queries: DataFrame,
-      nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qprobe = queries.as("q").join(broadcast(centroids))
-      .select(col("q.qid"), col("q.qv"), col("cell"), V.cosine(col("q.qv"), col("cv")).as("cs"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("cs").desc, col("cell").asc)
-    qprobe.withColumn("r", row_number().over(wProbe))
-      .filter(col("r") <= nprobe).select("qid", "qv", "cell")
+  /** The (cell, cv) frame of codebook `cb` — the `dir/centroids` layout,
+    * nlist rows built on the driver. */
+  private[operators] def codebookFrame(spark: org.apache.spark.sql.SparkSession,
+      cb: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "cv")
   }
 
-  /** Rank the probed cells' vectors against pre-computed (qid, qv, cell)
-    * probes — [[probeCells]] output, or a local relation of it when the
-    * caller already collected the probes for pruning literals. */
+  /** Each query's `nprobe` nearest cells of codebook `cb`, computed on
+    * the driver — the one probe definition every IVF search (in-memory
+    * and persisted, flat, SQ8 and PQ) goes through. A projection over
+    * the query rows scores every centroid literal with [[V.cosine]] and
+    * keeps the top `nprobe` of struct(cs, -cell) sorted descending: the
+    * (cs desc, cell asc) order, NaN first and null last. Over a local
+    * query frame the projection folds into the local relation and the
+    * collect runs no Spark job. Returns the probes as a local (qid, qv,
+    * cell) frame — nprobe·|queries| rows by construction — and the
+    * distinct probed cells, the pruning literals of a persisted scan. */
+  private def probes(queries: DataFrame, cb: Array[Array[Double]],
+      nprobe: Int): (DataFrame, Seq[Int]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val top =
+      if (cb.isEmpty) typedlit(Seq.empty[Int])
+      else slice(sort_array(array(cb.zipWithIndex.map { case (c, i) =>
+        struct(V.cosine(col("qv"), typedlit(c.toSeq)).as("cs"), lit(-i).as("nc"))
+      }: _*), asc = false), 1, math.max(nprobe, 0)).getField("nc")
+    val ranked = queries.select(col("qid"), col("qv"), top.as("nc"))
+    val rows = ranked.collect().toSeq.flatMap(r =>
+      r.getSeq[Int](2).map(nc => Row(r.get(0), r.get(1), -nc)))
+    val schema = StructType(Seq(ranked.schema("qid"), ranked.schema("qv"),
+      StructField("cell", IntegerType, nullable = false)))
+    (queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+      rows.map(_.getInt(2)).distinct)
+  }
+
+  /** `table` (a cell-partitioned payload) read with its scan pruned to
+    * `cells` by typed literal partition filters — static pruning at the
+    * file index, not a hope that dynamic partition pruning fires on the
+    * probe join. The literals are typed off the read schema (the
+    * searchLshIndex lesson: a literal/attribute type mismatch inserts a
+    * cast that silently defeats the pruning); `cell` comes back int. */
+  private def probedScan(spark: org.apache.spark.sql.SparkSession,
+      table: String, cells: Seq[Int]): DataFrame = {
+    val raw = IndexFiles.read(spark, table)
+    val cellIsInt =
+      raw.schema("cell").dataType == org.apache.spark.sql.types.IntegerType
+    val typed: Seq[Any] = if (cellIsInt) cells else cells.map(_.toLong)
+    (if (cells.isEmpty) raw.filter(lit(false))
+     else raw.filter(col("cell").isin(typed: _*)))
+      .withColumn("cell", col("cell").cast("int"))
+  }
+
+  /** Rank the probed cells' vectors against (qid, qv, cell) probes —
+    * the local frame [[probes]] returns. */
   private def probeAndRank(cells: DataFrame, probes: DataFrame,
       k: Int, metric: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1492,8 +1530,8 @@ object Ann {
       // corpus no bigger than the cell count — scan it exactly (also
       // covers empty input)
       case Left(filtered) => bruteForceTopK(filtered, queries, k, metric)
-      case Right((cells, centroids)) =>
-        probeAndRank(cells, probeCells(centroids, queries, nprobe), k, metric)
+      case Right((cells, cb)) =>
+        probeAndRank(cells, probes(queries, cb, nprobe)._1, k, metric)
     }
 
   /** Persist a trained IVF index — the Milvus create_index + load
@@ -1512,7 +1550,7 @@ object Ann {
   def buildIvfIndex(corpus: DataFrame, dir: String, nlist: Int = 16,
       seed: Long = 42L, trainCap: Long = -1L): Unit = {
     IndexFiles.clearTombstones(corpus.sparkSession, dir)
-    val (cells, centroids) = ivfFit(corpus, nlist, seed, trainCap)
+    val (cells, cb) = ivfFit(corpus, nlist, seed, trainCap)
       .getOrElse(throw new IllegalArgumentException(
         s"corpus must exceed nlist=$nlist vectors to index"))
     cells.withColumn("src", lit("base"))
@@ -1521,10 +1559,10 @@ object Ann {
       .routeForWrite("cell")
       .write.mode("overwrite").partitionBy("src", "cell")
       .parquet(s"$dir/cells")
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    val spark = corpus.sparkSession
+    codebookFrame(spark, cb).write.mode("overwrite").parquet(s"$dir/centroids")
     // compact id sidecar for the append-time replayed-id guard: read the
     // ids back off the just-written cells (column-pruned, no re-assignment)
-    val spark = corpus.sparkSession
     IndexFiles.writeIds(spark.read.parquet(s"$dir/cells").select("id"), dir)
     writeTrainStats(spark, dir)
   }
@@ -1583,8 +1621,7 @@ object Ann {
     require(src.nonEmpty && src != "base",
       s"append src must be a non-empty tag other than 'base': '$src'")
     IndexFiles.healAppend(spark, dir, Seq("cells"))
-    val cb = spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
+    val cb = IndexFiles.codebook(spark, dir)
     require(cb.nonEmpty, s"$dir/centroids is empty — not a built IVF index")
     requireBatchDim(batch, "v", cb(0).length)
     val b = Dedup.spread(batch)
@@ -1756,9 +1793,7 @@ object Ann {
     // merge retirement segments (the window keeps aging correctly)
     val stored = spark.read.parquet(s"$dir/cells")
       .select(col("id"), col("v"), col("src"))
-    val k =
-      if (nlist > 0) nlist
-      else spark.read.parquet(s"$dir/centroids").count().toInt
+    val k = if (nlist > 0) nlist else IndexFiles.codebook(spark, dir).length
     require(k >= 1, s"nlist must be >= 1, got $k")
     val live = IndexFiles.dropTombstones(spark, dir, stored)
     val firstRow = live.select(col("v")).take(1)
@@ -1776,11 +1811,7 @@ object Ann {
       stored.select(col("id"), col("v"), col("src"),
         cellOf(col("v"), cb).as("cell")),
       Seq("src", "cell"))
-    val s = spark
-    import s.implicits._
-    IndexFiles.replaceTable(spark, dir, "centroids",
-      cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "cv"), Nil)
+    IndexFiles.replaceTable(spark, dir, "centroids", codebookFrame(spark, cb), Nil)
     writeTrainStats(spark, dir)
   }
 
@@ -1805,7 +1836,7 @@ object Ann {
   def buildIvfSq8Index(corpus: DataFrame, dir: String, nlist: Int = 16,
       seed: Long = 42L, trainCap: Long = -1L): Unit = {
     IndexFiles.clearTombstones(corpus.sparkSession, dir)
-    val (cells, centroids) = ivfFit(corpus, nlist, seed, trainCap)
+    val (cells, cb) = ivfFit(corpus, nlist, seed, trainCap)
       .getOrElse(throw new IllegalArgumentException(
         s"corpus must exceed nlist=$nlist vectors to index"))
     cells.select(col("id"), V.quantizeSq8(col("v")).as("cz"), col("cell"))
@@ -1813,8 +1844,8 @@ object Ann {
       .routeForWrite("cell")
       .write.mode("overwrite").partitionBy("src", "cell")
       .parquet(s"$dir/cells")
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     val spark = corpus.sparkSession
+    codebookFrame(spark, cb).write.mode("overwrite").parquet(s"$dir/centroids")
     IndexFiles.writeIds(spark.read.parquet(s"$dir/cells").select("id"), dir)
     // the cells store codes — record the fitted distribution from the
     // raw fit frame (rebuild IS this family's retrain, so build-time
@@ -1833,8 +1864,7 @@ object Ann {
     require(src.nonEmpty && src != "base",
       s"append src must be a non-empty tag other than 'base': '$src'")
     IndexFiles.healAppend(spark, dir, Seq("cells"))
-    val cb = spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
+    val cb = IndexFiles.codebook(spark, dir)
     require(cb.nonEmpty, s"$dir/centroids is empty — not a built IVF_SQ8 index")
     requireBatchDim(batch, "v", cb(0).length)
     val b = Dedup.spread(batch)
@@ -1888,24 +1918,10 @@ object Ann {
     IndexFiles.requireNoPendingAppend(spark, dir)
     IndexFiles.requireLiveTable(spark, dir, "cells")
     IndexFiles.requireLiveTable(spark, dir, "centroids")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val pc = probeCells(centroids, queries, nprobe)
-    val probeRows = pc.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), pc.schema)
-    val probed = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    // type the pruning literals off the actual partition-column schema
-    // (the searchLshIndex lesson — a mismatch inserts a cast that
-    // defeats static pruning)
-    val raw = spark.read.parquet(s"$dir/cells")
-    val cellIsInt =
-      raw.schema("cell").dataType == org.apache.spark.sql.types.IntegerType
-    val typed: Seq[Any] = if (cellIsInt) probed else probed.map(_.toLong)
-    val pruned = (if (probed.isEmpty) raw.filter(lit(false))
-                  else raw.filter(col("cell").isin(typed: _*)))
-      .withColumn("cell", col("cell").cast("int"))
-    val live = IndexFiles.dropTombstones(spark, dir, pruned)
-    val qz = probes.select(col("qid"), col("cell"),
+    val (pf, probed) = probes(queries, IndexFiles.codebook(spark, dir), nprobe)
+    val live = IndexFiles.dropTombstones(spark, dir,
+      probedScan(spark, s"$dir/cells", probed))
+    val qz = pf.select(col("qid"), col("cell"),
       V.quantizeSq8(col("qv")).as("qz"))
     val scored = live.as("c").join(broadcast(qz.as("p")), "cell")
       .select(col("p.qid"), col("c.id"),
@@ -2016,23 +2032,20 @@ object Ann {
         " — append it instead of smuggling it in through a retrain")
     val oldPq = readPqCodebooks(spark, dir)
     val (m, ksub) = (oldPq.length, oldPq(0).length)
-    val k =
-      if (nlist > 0) nlist
-      else spark.read.parquet(s"$dir/centroids").count().toInt
+    val k = if (nlist > 0) nlist else IndexFiles.codebook(spark, dir).length
     // train on the live rows only; re-encode everything (tombstones
     // keep hiding their rows until compaction)
     val liveC = IndexFiles.dropTombstones(spark, dir, c)
-    val (liveCells, centroids) = ivfFit(liveC, k, seed, trainCap)
+    val (liveCells, cb) = ivfFit(liveC, k, seed, trainCap)
       .getOrElse(throw new IllegalArgumentException(
         s"index must exceed nlist=$k live vectors to retrain"))
-    val dim = centroids.head().getSeq[Double](1).length
+    val centroids = codebookFrame(spark, cb)
+    val dim = cb(0).length
     require(dim % m == 0, s"dim $dim not divisible into m=$m subspaces")
     val cbs = trainPqResidual(pqResiduals(liveCells, centroids), dim, m, ksub,
       seed, trainCap).getOrElse(throw new IllegalArgumentException(
         s"index must exceed ksub=$ksub live vectors to retrain"))
-    val cbArr = centroids.orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
-    val allCells = c.select(col("id"), col("v"), cellOf(col("v"), cbArr).as("cell"))
+    val allCells = c.select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
     // each re-encoded row keeps its stored src: a retrain re-fits
     // codebooks but must not merge retirement segments (replaceTable
     // stages the new files while the old ones are still readable, so
@@ -2146,16 +2159,6 @@ object Ann {
     IndexFiles.storedIds(spark, dir,
       spark.read.parquet(s"$dir/$payload").select("id").distinct())
 
-  /** Search a persisted IVF index. Same results as [[ivfTopK]] with the
-    * build's parameters; only the probed cells' partitions are read.
-    * Like [[searchLshIndex]], the probed cell ids are collected
-    * driver-side (nprobe·|queries| ints by construction) and applied as
-    * typed literal partition filters — STATIC pruning at the file
-    * index, not a hope that dynamic partition pruning fires on the
-    * probe join. A bare broadcast join would scan every cell whenever
-    * DPP declines (it needs a selective build-side filter), which at
-    * 100 TB is the difference between reading nprobe/nlist and reading
-    * everything. */
   /** [[searchIvfIndex]] restricted to an allowed-id set — the Milvus
     * search-with-expr composite over an INDEXED collection: the scalar
     * predicate runs where the scalar fields live (the caller's
@@ -2171,6 +2174,19 @@ object Ann {
     searchIvfIndex(spark, dir, queries, k, nprobe, metric,
       allowedIds = Some(allowed))
 
+  /** Search a persisted IVF index. Same results as [[ivfTopK]] with the
+    * build's parameters; only the probed cells' partitions are read.
+    * The probes are computed on the driver ([[probes]]) against the
+    * codebook cached per index generation ([[IndexFiles.codebook]]):
+    * over a local query frame neither step runs a Spark job. The one
+    * collected probe set feeds both the rank join's probe side (a local
+    * relation) and the scan's typed literal partition filters
+    * ([[probedScan]]) — STATIC pruning at the file index. A bare
+    * broadcast join would scan every cell whenever dynamic partition
+    * pruning declines, which at 100 TB is the difference between
+    * reading nprobe/nlist and reading everything. Tables are read
+    * without schema-inference jobs ([[IndexFiles.read]]), so the search
+    * runs as one ranking query plus its probe and tombstone broadcasts. */
   def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, nprobe: Int = 4,
       metric: String = "cosine",
@@ -2178,28 +2194,8 @@ object Ann {
     IndexFiles.requireNoPendingAppend(spark, dir)
     IndexFiles.requireLiveTable(spark, dir, "cells")
     IndexFiles.requireLiveTable(spark, dir, "centroids")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    // Compute the probes ONCE: collect the (qid, qv, cell) rows —
-    // nprobe·|queries| by construction — and derive BOTH the pruning
-    // literals and the rank join's probe side from that one result (as
-    // a local relation), instead of running the probe plan a second
-    // time inside the rank.
-    val pc = probeCells(centroids, queries, nprobe)
-    val probeRows = pc.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), pc.schema)
-    val probed = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    // `cell` is a partition column on read; inference yields INT for
-    // these directory values, but type the literals off the actual
-    // schema (the searchLshIndex lesson: a literal/attribute type
-    // mismatch inserts a cast that silently defeats the pruning).
-    val raw = spark.read.parquet(s"$dir/cells")
-    val cellIsInt =
-      raw.schema("cell").dataType == org.apache.spark.sql.types.IntegerType
-    val typed: Seq[Any] = if (cellIsInt) probed else probed.map(_.toLong)
-    val pruned = (if (probed.isEmpty) raw.filter(lit(false))
-                  else raw.filter(col("cell").isin(typed: _*)))
-      .withColumn("cell", col("cell").cast("int"))
+    val (pf, probed) = probes(queries, IndexFiles.codebook(spark, dir), nprobe)
+    val pruned = probedScan(spark, s"$dir/cells", probed)
     // tombstoned ids ([[deleteFromIvfIndex]]) never reach the ranking —
     // bit-equal to searching the physically compacted index
     val live = IndexFiles.dropTombstones(spark, dir, pruned)
@@ -2207,7 +2203,7 @@ object Ann {
     // the rank for the same reason the tombstone filter does
     val scoped = allowedIds.fold(live)(a =>
       live.join(broadcast(a.select(col("id")).distinct()), Seq("id"), "left_semi"))
-    probeAndRank(scoped, probes, k, metric)
+    probeAndRank(scoped, pf, k, metric)
   }
 
   /** Cluster-balanced downsample through the persisted IVF index's own
@@ -2456,9 +2452,10 @@ object Ann {
     ivfFit(corpus, nlist, seed, trainCap) match {
       // corpus no bigger than the cell count — scan it exactly
       case Left(filtered) => bruteForceTopK(filtered, queries, k, "l2")
-      case Right((cells, centroids)) =>
-        val dim = centroids.head().getSeq[Double](1).length
+      case Right((cells, cb)) =>
+        val dim = cb(0).length
         require(dim % m == 0, s"dim $dim not divisible into m=$m subspaces")
+        val centroids = codebookFrame(corpus.sparkSession, cb)
         val res = pqResiduals(cells, centroids)
         trainPqResidual(res, dim, m, ksub, seed, trainCap) match {
           // corpus no bigger than one codebook — PQ gains nothing
@@ -2467,7 +2464,7 @@ object Ann {
             val codes = res.select(col("id"), col("cell"),
               pqCodes(col("res"), cbs).as("codes"))
             adcRank(codes,
-              ivfPqLuts(probeCells(centroids, queries, nprobe), centroids, cbs), k)
+              ivfPqLuts(probes(queries, cb, nprobe)._1, centroids, cbs), k)
         }
     }
   }
@@ -2534,11 +2531,12 @@ object Ann {
       trainCap: Long = -1L): Unit = {
     require(ksub >= 2 && ksub <= 256, s"ksub must be in [2,256], got $ksub")
     IndexFiles.clearTombstones(corpus.sparkSession, dir)
-    val (cells, centroids) = ivfFit(corpus, nlist, seed, trainCap)
+    val (cells, cb) = ivfFit(corpus, nlist, seed, trainCap)
       .getOrElse(throw new IllegalArgumentException(
         s"corpus must exceed nlist=$nlist vectors to index"))
-    val dim = centroids.head().getSeq[Double](1).length
+    val dim = cb(0).length
     require(dim % m == 0, s"dim $dim not divisible into m=$m subspaces")
+    val centroids = codebookFrame(corpus.sparkSession, cb)
     val res = pqResiduals(cells, centroids)
     val cbs = trainPqResidual(res, dim, m, ksub, seed, trainCap)
       .getOrElse(throw new IllegalArgumentException(
@@ -2563,7 +2561,7 @@ object Ann {
     * driver-side by construction. */
   private def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
       dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$dir/pq")
+    val rows = IndexFiles.read(spark, s"$dir/pq")
       .select(col("sub"), col("code"), col("vec")).collect()
     require(rows.nonEmpty, s"$dir/pq is empty — not a built IVF-PQ index")
     val m = rows.map(_.getInt(0)).max + 1
@@ -2577,34 +2575,23 @@ object Ann {
 
   /** Search a persisted IVF-PQ index. Bit-equal to [[ivfPqTopK]] with
     * the build's parameters (same codebooks, same codes, same LUTs);
-    * like [[searchIvfIndex]], the probes are computed ONCE and the
-    * probed cell ids become typed literal partition filters — static
-    * pruning at the file index, reading ~nprobe/nlist of the code
-    * files and none of the raw vectors. */
+    * like [[searchIvfIndex]], the probes are computed on the driver
+    * against the cached codebook and the probed cell ids become typed
+    * literal partition filters — static pruning at the file index,
+    * reading ~nprobe/nlist of the code files and none of the raw
+    * vectors. */
   def searchIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
     requireNoPendingRetrain(spark, dir)
     Seq("codes", "centroids", "pq")
       .foreach(IndexFiles.requireLiveTable(spark, dir, _))
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val cb = IndexFiles.codebook(spark, dir)
     val cbs = readPqCodebooks(spark, dir)
-    val pc = probeCells(centroids, queries, nprobe)
-    val probeRows = pc.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), pc.schema)
-    val probed = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    // type the literals off the read schema (the searchLshIndex lesson:
-    // a literal/attribute type mismatch casts away the static pruning)
-    val raw = spark.read.parquet(s"$dir/codes")
-    val cellIsInt =
-      raw.schema("cell").dataType == org.apache.spark.sql.types.IntegerType
-    val typed: Seq[Any] = if (cellIsInt) probed else probed.map(_.toLong)
-    val codes = (if (probed.isEmpty) raw.filter(lit(false))
-                 else raw.filter(col("cell").isin(typed: _*)))
-      .withColumn("cell", col("cell").cast("int"))
-    adcRank(IndexFiles.dropTombstones(spark, dir, codes),
-      ivfPqLuts(probes, centroids, cbs), k)
+    val (pf, probed) = probes(queries, cb, nprobe)
+    adcRank(IndexFiles.dropTombstones(spark, dir,
+        probedScan(spark, s"$dir/codes", probed)),
+      ivfPqLuts(pf, codebookFrame(spark, cb), cbs), k)
   }
 
   /** Append a batch to a persisted IVF-PQ index WITHOUT re-training:
@@ -2623,9 +2610,7 @@ object Ann {
       s"append src must be a non-empty tag other than 'base': '$src'")
     requireNoPendingRetrain(spark, dir)
     IndexFiles.healAppend(spark, dir, Seq("codes"))
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val cb = centroids.orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
+    val cb = IndexFiles.codebook(spark, dir)
     require(cb.nonEmpty, s"$dir/centroids is empty — not a built IVF-PQ index")
     requireBatchDim(batch, "v", cb(0).length)
     val cbs = readPqCodebooks(spark, dir)
@@ -2641,7 +2626,7 @@ object Ann {
         "in the index — replayed ids would duplicate search hits")
     val cells = b.select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
     IndexFiles.appendStaged(spark, dir, Seq(
-      ("codes", pqResiduals(cells, centroids)
+      ("codes", pqResiduals(cells, codebookFrame(spark, cb))
         .select(col("id"), col("cell"), pqCodes(col("res"), cbs).as("codes"))
         .withColumn("src", lit(src))
         .routeForWrite("cell"),
@@ -2766,7 +2751,7 @@ object Ann {
     import spark.implicits._
     require(!queries.isEmpty,
       "cannot tune nprobe on zero queries — recall is undefined")
-    val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+    val nlist = IndexFiles.codebook(spark, dir).length
     val exact = searchIvfIndex(spark, dir, queries, k, nprobe = nlist,
       metric)
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Boolean)]
@@ -2951,7 +2936,7 @@ object Ann {
         .exists(statsPath),
       s"$dir has no train_stats record (built before training-stats " +
         s"recording) — $statsHint")
-    val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+    val nlist = IndexFiles.codebook(spark, dir).length
     // `reference` lets a scheduled driver advising the same index
     // against a stable query set pay the full probe once per retrain
     // generation, not once per cron tick — any (qid, id, rank) frame

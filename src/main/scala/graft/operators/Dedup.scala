@@ -1897,7 +1897,8 @@ object Dedup {
         clean.select(col("id"), lit(-1).as("cell"),
             lit(null).cast("double").as("csim"))
           .unionByName(excluded)
-      case Right((cells, centroids)) =>
+      case Right((cells, cb)) =>
+        val centroids = Ann.codebookFrame(df.sparkSession, cb)
         // localCheckpointed (not cache()d): the assignment (k dot
         // products per vector) feeds both self-join sides AND the
         // survivors' anti-join — one pass, not 3 — and checkpoint

@@ -56,6 +56,92 @@ private[graft] object IndexFiles {
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Spark's listing filter: `_`-prefixed names other than `k=v`
+    * partition dirs, `.`-prefixed names and in-flight copies are not
+    * table data. */
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** `p`'s listing, empty when `p` does not exist. */
+  private def listOrEmpty(fs: org.apache.hadoop.fs.FileSystem,
+      p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(p).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The data file whose path string sorts first among a directory
+    * listing's leaves — the one Spark's parquet schema inference reads.
+    * Entries are visited in the order of their leaves' paths (a
+    * directory's leaves all start with its path plus `/`), so the first
+    * file found is the minimum and one listing per level suffices. */
+  private def firstDataFile(fs: org.apache.hadoop.fs.FileSystem,
+      listing: Seq[org.apache.hadoop.fs.FileStatus])
+      : Option[org.apache.hadoop.fs.FileStatus] =
+    listing.filterNot(st => hiddenName(st.getPath.getName))
+      .sortBy(st => st.getPath.toString + (if (st.isDirectory) "/" else ""))
+      .iterator
+      .flatMap(st =>
+        if (st.isDirectory) firstDataFile(fs, fs.listStatus(st.getPath).toSeq)
+        else Iterator(st))
+      .nextOption()
+
+  /** Read a parquet table without Spark's schema-inference job: the data
+    * schema comes from one footer read on the driver — the file and the
+    * conversion Spark's inference would use
+    * ([[org.apache.spark.sql.graft.FooterSchema]]) — and partition
+    * columns are still inferred from the directory names, so the
+    * resulting schema equals `spark.read.parquet(path).schema`. A path
+    * with no data files (missing, or an all-filtered partitioned table)
+    * or with parquet summary files goes through plain
+    * `spark.read.parquet`, keeping its errors. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val top = listOrEmpty(fs, root)
+    val summaries = top.exists(st =>
+      Set("_metadata", "_common_metadata").contains(st.getPath.getName))
+    (if (summaries) None else firstDataFile(fs, top)) match {
+      case Some(f) => spark.read
+        .schema(org.apache.spark.sql.graft.FooterSchema.read(spark, f))
+        .parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** Driver-side codebook cache: qualified `centroids` path → (the part
+    * files' (name, length, mtime), codebook). One entry per index, so a
+    * long-lived driver holds at most one codebook per index directory. */
+  private val codebooks = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], Array[Array[Double]])]()
+
+  /** The coarse codebook of an IVF-family index, `dir/centroids` as
+    * rows indexed by cell. Cached per generation: the key is the table's
+    * part files' names, lengths and mtimes, and every build or retrain
+    * writes fresh UUID-named part files, so any rewrite misses the cache
+    * and replaces the entry. A hit costs one listing and no Spark job.
+    * Empty for an empty table; callers must not mutate the arrays. */
+  def codebook(spark: SparkSession, dir: String): Array[Array[Double]] = {
+    val fs = fsOf(spark, dir)
+    val path = fs.makeQualified(new Path(s"$dir/centroids"))
+    val parts = listOrEmpty(fs, path)
+      .filterNot(st => hiddenName(st.getPath.getName))
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .sorted
+    Option(codebooks.get(path.toString)).filter(_._1 == parts).map(_._2)
+      .getOrElse {
+        val rows = read(spark, path.toString).select("cell", "cv").collect()
+          .sortBy(_.getInt(0))
+        require(rows.map(_.getInt(0)).toSeq == rows.indices,
+          s"$path cells are not 0..${rows.length - 1}")
+        val cb = rows.map(_.getSeq[Double](1).toArray)
+        if (parts.nonEmpty) codebooks.put(path.toString, (parts, cb))
+        cb
+      }
+  }
+
+  /** Empty the codebook cache (specs compare against a cold read). */
+  private[graft] def clearCodebookCache(): Unit = codebooks.clear()
+
   /** Per-table staging dir for [[appendStaged]] — INSIDE the live table
     * but underscore-prefixed, so every Spark read of the table ignores
     * it while the batch is being written. */
@@ -171,7 +257,7 @@ private[graft] object IndexFiles {
     require(fs.rename(tmp, journal), s"commit journal $journal failed")
     tables.foreach { case (t, _, _) => moveStagedIn(fs, s"$dir/$t") }
     if (batchIds.isDefined)
-      spark.read.parquet(journal.toString)
+      read(spark, journal.toString)
         .write.mode("append").parquet(s"$dir/ids")
     require(fs.delete(journal, true), s"delete journal $journal failed")
     // refresh exactly the mutated table roots, not the whole dir:
@@ -350,7 +436,7 @@ private[graft] object IndexFiles {
     * Partition columns are projected away either way. */
   def readOrEmpty(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
-    try spark.read.parquet(path).select(
+    try read(spark, path).select(
       schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
     catch {
       case e: org.apache.spark.sql.AnalysisException
@@ -446,7 +532,7 @@ private[graft] object IndexFiles {
     * that will extend the sidecar afterwards. */
   def storedIds(spark: SparkSession, dir: String,
       fallback: => DataFrame): DataFrame =
-    if (exists(spark, dir)) spark.read.parquet(s"$dir/ids") else fallback
+    if (exists(spark, dir)) read(spark, s"$dir/ids") else fallback
 
   /** Like [[storedIds]], but backfills a missing sidecar from the
     * fallback first, so [[appendStaged]]'s journal-driven sidecar
@@ -456,7 +542,7 @@ private[graft] object IndexFiles {
   def ensureIds(spark: SparkSession, dir: String,
       fallback: => DataFrame): DataFrame = {
     if (!exists(spark, dir)) writeIds(fallback, dir)
-    spark.read.parquet(s"$dir/ids")
+    read(spark, s"$dir/ids")
   }
 
   /** Invalidate (and rebuild) any cached plan reading under `dir`.
@@ -510,7 +596,7 @@ private[graft] object IndexFiles {
   def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = new Path(s"$dir/deleted")
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(spark.read.parquet(s"$dir/deleted"))
+      Some(read(spark, s"$dir/deleted"))
     else None
   }
 
@@ -541,7 +627,13 @@ private[graft] object IndexFiles {
     * anti-join side is size-dispatched ([[sizeCappedBroadcast]]). */
   def dropTombstones(spark: SparkSession, dir: String,
       payload: DataFrame): DataFrame =
-    tombstones(spark, dir).map(d =>
+    dropTombstones(spark, dir, payload, tombstones(spark, dir))
+
+  /** [[dropTombstones]] against an already-read [[tombstones]] result —
+    * for searches that filter several tables against one tombstone set. */
+  def dropTombstones(spark: SparkSession, dir: String, payload: DataFrame,
+      dead: Option[DataFrame]): DataFrame =
+    dead.map(d =>
       payload.join(sizeCappedBroadcast(spark, s"$dir/deleted", d),
         Seq("id"), "left_anti")).getOrElse(payload)
 
@@ -719,11 +811,13 @@ private[graft] object IndexFiles {
 
   /** Drop a persisted index — the Milvus drop_collection surface
     * (milvus_connector.py:188-190). Deletes the whole dir (payloads,
-    * sidecars, replay markers) and invalidates any cached scans so a
-    * stale fragment can never serve a search against the dead index. */
+    * sidecars, replay markers) and invalidates any cached scans (and
+    * the cached codebook) so a stale fragment can never serve a search
+    * against the dead index. */
   def dropIndex(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
     refresh(spark, dir)
+    codebooks.remove(fs.makeQualified(new Path(s"$dir/centroids")).toString)
     require(fs.delete(new Path(dir), true) || !fs.exists(new Path(dir)),
       s"failed to delete index dir $dir")
   }

@@ -401,7 +401,7 @@ object StreamCurate {
       if (!pinned.isEmpty) {
         val (approx, exact) =
           if (has("codes")) {
-            val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+            val nlist = IndexFiles.codebook(spark, dir).length
             val ex = Ann.searchIvfPqIndex(spark, dir, pinned, k,
               nprobe = nlist).persist()
             (if (nprobe >= nlist) ex
@@ -413,7 +413,7 @@ object StreamCurate {
             val ex = Ann.bruteForceTopK(stored, pinned, k, metric).persist()
             (Ann.searchLshIndex(spark, dir, pinned, k, metric), ex)
           } else {
-            val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+            val nlist = IndexFiles.codebook(spark, dir).length
             val ex = Ann.searchIvfIndex(spark, dir, pinned, k,
               nprobe = nlist, metric = metric).persist()
             (if (nprobe >= nlist) ex

@@ -2330,4 +2330,142 @@ class AnnSpec extends SparkSpec {
     // misconfiguration is loud
     intercept[IllegalArgumentException](sample(0))
   }
+
+  test("IndexFiles.read: every IVF, SQ8, PQ and sparse table reads with spark.read.parquet's schema") {
+    import graft.operators.IndexFiles
+    val root = java.nio.file.Files.createTempDirectory("readschema").toString
+    val base = corpus.filter(col("id") <= 150)
+    val batch = corpus.filter(col("id") > 150)
+    val dead = Seq(3L, 160L).toDF("id")
+    val (ivf, sq8, pq, sparse) =
+      (s"$root/ivf", s"$root/sq8", s"$root/pq", s"$root/sparse")
+    Ann.buildIvfIndex(base, ivf, nlist = 4)
+    Ann.appendToIvfIndex(spark, ivf, batch, "d1")
+    Ann.deleteFromIvfIndex(spark, ivf, dead)
+    Ann.buildIvfSq8Index(base, sq8, nlist = 4)
+    Ann.appendToIvfSq8Index(spark, sq8, batch, "d1")
+    Ann.deleteFromIvfSq8Index(spark, sq8, dead)
+    Ann.buildIvfPqIndex(base, pq, nlist = 4, m = 4, ksub = 16)
+    Ann.appendToIvfPqIndex(spark, pq, batch, "d1")
+    Ann.deleteFromIvfPqIndex(spark, pq, dead)
+    val postings = (1 to 50).flatMap(i =>
+      Seq((i.toLong, i.toLong, 2.0), (i.toLong, (i + 1).toLong, 1.0)))
+      .toDF("id", "term", "w")
+    Ann.buildSparseIndex(postings.filter(col("id") <= 30), sparse, buckets = 8)
+    Ann.appendToSparseIndex(spark, sparse, postings.filter(col("id") > 30), "d1")
+    Ann.deleteFromSparseIndex(spark, sparse, Seq(3L, 40L).toDF("id"))
+    val tables = Seq(ivf, sq8, pq, sparse).flatMap(d =>
+      new java.io.File(d).listFiles().toSeq
+        .filter(f => f.isDirectory && !f.getName.startsWith("_"))
+        .map(_.getPath))
+    Seq("ivf/cells", "ivf/centroids", "ivf/deleted", "sq8/cells",
+        "pq/codes", "pq/pq", "sparse/postings", "sparse/doclens",
+        "sparse/meta", "sparse/stats").foreach(t =>
+      assert(tables.contains(s"$root/$t"), s"$t missing from $tables"))
+    tables.foreach { p =>
+      assert(IndexFiles.read(spark, p).schema == spark.read.parquet(p).schema,
+        s"schema of $p differs")
+    }
+    // an all-filtered partitioned write leaves no data file: both readers
+    // fail the same way, and readOrEmpty still synthesizes the frame
+    val emptyPart = s"$root/empty_part"
+    Seq.empty[(Long, String)].toDF("id", "src")
+      .write.partitionBy("src").parquet(emptyPart)
+    val viaRead = intercept[org.apache.spark.sql.AnalysisException](
+      IndexFiles.read(spark, emptyPart))
+    val viaSpark = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(emptyPart))
+    assert(viaRead.getCondition == viaSpark.getCondition)
+    val idOnly = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType)))
+    val synthesized = IndexFiles.readOrEmpty(spark, emptyPart, idOnly)
+    assert(synthesized.schema == idOnly && synthesized.isEmpty)
+    // an unpartitioned empty write keeps one schema-only part file
+    val emptyFlat = s"$root/empty_flat"
+    Seq.empty[(Long, String)].toDF("id", "src").write.parquet(emptyFlat)
+    assert(IndexFiles.read(spark, emptyFlat).schema ==
+      spark.read.parquet(emptyFlat).schema)
+  }
+
+  test("IndexFiles.codebook: a rebuild or retrain replaces the cached codebook") {
+    import graft.operators.IndexFiles
+    val dir = java.nio.file.Files.createTempDirectory("cbcache").toString + "/idx"
+    def search(q: org.apache.spark.sql.DataFrame) =
+      Ann.searchIvfIndex(spark, dir, q, k = 10, nprobe = 2)
+        .select("qid", "id", "score", "rank")
+        .as[(Long, Long, Double, Int)].collect().toSet
+    def cold(q: org.apache.spark.sql.DataFrame) = {
+      IndexFiles.clearCodebookCache()
+      search(q)
+    }
+    Ann.buildIvfIndex(corpus, dir, nlist = 8)
+    val first = search(qs)
+    assert(first.nonEmpty && first == cold(qs))
+    // same directory, different nlist AND dimension: a cache keyed on the
+    // path alone would probe 8-d queries with the 16-d codebook
+    val dim2 = 8
+    val corpus2 = (1 to 200).map { i =>
+      (i.toLong, Seq.tabulate(dim2)(j => math.cos(i * 37 + j * 11)))
+    }.toDF("id", "v")
+    val qs2 = (1 to 5).map { i =>
+      (i.toLong, Seq.tabulate(dim2)(j => math.cos(i * 37 + j * 11)))
+    }.toDF("qid", "qv")
+    Ann.buildIvfIndex(corpus2, dir, nlist = 4)
+    val rebuilt = search(qs2)
+    assert(rebuilt.nonEmpty && rebuilt == cold(qs2))
+    assert(IndexFiles.codebook(spark, dir).map(_.length).toSeq == Seq.fill(4)(dim2))
+    search(qs2) // cache the rebuilt generation before the retrain
+    Ann.retrainIvfIndex(spark, dir, nlist = 6)
+    val retrained = search(qs2)
+    assert(retrained.nonEmpty && retrained == cold(qs2))
+    assert(IndexFiles.codebook(spark, dir).length == 6)
+  }
+
+  test("searchIvfIndex: after a warm-up, a local 16-query search runs <= 3 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("ivfjobs").toString + "/idx"
+    Ann.buildIvfIndex(corpus.filter(col("id") <= 150), dir, nlist = 8)
+    Ann.appendToIvfIndex(spark, dir, corpus.filter(col("id") > 150), "d1")
+    Ann.deleteFromIvfIndex(spark, dir, Seq(3L, 160L).toDF("id"))
+    val q16 = (1 to 16).map { i =>
+      (i.toLong, Seq.tabulate(dim)(j => math.sin(i * 29 + j * 7)))
+    }.toDF("qid", "qv") // a local relation, like a client's query batch
+    def search() = Ann.searchIvfIndex(spark, dir, q16, k = 10, nprobe = 4)
+      .select("qid", "id", "score", "rank").collect()
+    // the engine's own sessions (Sessions.local) run with adaptive
+    // execution off, where a shuffle stage is not a job of its own
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val sc = spark.sparkContext
+    val (group, marker) = ("annspec-search-jobs", "annspec-search-jobs-done")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => done.countDown()
+          case _ =>
+        }
+    }
+    try {
+      search() // warm-up: caches the codebook
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "measured search")
+      val hits = search()
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of the measured search has been counted
+      sc.setJobGroup(marker, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(hits.length == 16 * 10)
+      assert(jobs.get() >= 1 && jobs.get() <= 3,
+        s"searchIvfIndex ran ${jobs.get()} jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+  }
 }
